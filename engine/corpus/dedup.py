@@ -30,6 +30,8 @@ Scale design (10^12 docs):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -356,13 +358,10 @@ def simhash_near_pairs(
         # no-silent-caps convention: buckets beyond the cap stay on the
         # single-task equi-join path — exactly the anti-scaling this split
         # exists to fix — so say so instead of silently truncating.
-        import sys
-
-        print(
+        logging.getLogger(__name__).warning(
             f"simhash_near_pairs: hot-bucket list truncated at {_HOT_CAP}; "
             f"excess hot buckets fall back to the plain equi-join "
-            f"(raise hot_bucket_rows or shard the input)",
-            file=sys.stderr,
+            f"(raise hot_bucket_rows or shard the input)"
         )
         hot_rows = hot_rows[:_HOT_CAP]
     if hot_rows:

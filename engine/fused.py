@@ -17,34 +17,45 @@ partitioning+ordering in a single Window operator without re-shuffling, so
 the whole chain collapses to:
 
 * **Exchange 1** — the tagged probe∪state union, clustered by
-  ``(entity, bucket)``; one sorted pass computes the in-bucket as-of
-  resolution, per-probe row numbers, in-bucket lags, the session-gap
-  flag, and the in-bucket expanding (range) cums for the rolling partials.
-* **Tiny carry tables** — one row per (entity, active bucket): the as-of
-  carry (last state payload, forward-filled), and a second carry holding
-  per-bucket max/min timestamps, session-flag totals, rolling-partial
-  totals, and the K-row bucket tail for cross-bucket lag context. Both are
-  |entities × buckets| — broadcast-joined, never a wide shuffle.
+  ``(entity, bucket)`` and sorted once. Two window passes share that
+  order: the first resolves every row's in-bucket as-of payload, the
+  previous probe's ts and the probe ordinal; the second computes each
+  probe's in-bucket features (expanding range cums for the rolling
+  partials, session flags, the last k rows for lags, fills) and each
+  bucket's totals. Probe rows plus one totals row per bucket are persisted.
+* **Carry table** — one row per (entity, bucket holding probes), built in
+  one ordered pass per entity over its bucket totals (an aggregation and a
+  fold: no window, no shuffle of the frame). It holds the state carried
+  INTO the bucket: the payload of the last earlier state row, the session
+  count, the running partial totals, the last fill values, the last k
+  rows and the cutoff start offsets. A bucket's probes that precede its
+  first state row all resolve to the carried payload, so each bucket total
+  is the in-bucket value plus (#such probes × the carry), known in the
+  same step. |entities × buckets| rows, broadcast-joined to the probes.
 * **Exchange 2** — the prefix-rolling cutoff resolution: each feature row
   explodes into (state@ts, probe@ts−W−1µs) roles clustered by
   ``(entity, bucket_of_role_key)``; one sorted pass resolves the cutoff
-  cums; buckets that hold no earlier row fall back to a broadcast
-  per-bucket start-offset table.
+  cums; a cutoff whose bucket holds no earlier feature row starts from the
+  carried start offset.
+
+The plan is kept small enough for Spark's generated-class cache (100
+entries by default): a routed execution compiles at most 60 classes
+(asserted in tests/test_fused.py and scripts/audit_plans.py), so a repeated
+execution recompiles nothing. E1 and E2 rows share their leading columns,
+so both exchanges, sorts and window keys reuse the same classes.
 
 **Hybrid mode (``hot_keys=``)** — the whole-pipeline skew split collapses
 into the SAME two exchanges: the bucket id becomes
 ``B = hot(entity) ? floor(ts/bucket) : 0``, so hot entities are time-split
 across tasks while every cold entity keeps a single per-entity group
-(exactly the plain single-window plan). The carry tables are built from
-the hot slices only (tiny, persisted once) and broadcast; cold rows simply
-miss in the carry join and coalesce to the no-earlier-bucket defaults —
-which is precisely their semantics. Compared to the two-branch split
-(cold chain ∪ per-op bucketed hot chain), this removes the duplicate input
-scans, the hot branch's ~10 fixed-cost stages, the plan-truncation
-checkpoints, and the branch persists: the big data makes exactly one pass
-through each exchange. At 100 TB the carry tables stay
-|hot_keys × active buckets| rows — size ``bucket`` so that stays
-broadcastable (e.g. 10k hot keys × 120 buckets ≈ 1.2M tiny rows).
+(exactly the plain single-window plan). The carry table is built from the
+hot buckets only; cold rows miss in the carry join and coalesce to the
+no-earlier-bucket defaults — which is precisely their semantics. Compared
+to the two-branch split (cold chain ∪ per-op bucketed hot chain), this
+removes the duplicate input scans, the hot branch's ~10 fixed-cost stages
+and the branch persists: the big data makes exactly one pass through each
+exchange. The carry table stays |hot_keys × active buckets| rows — size
+``bucket`` so that stays broadcastable (e.g. 10k hot keys × 120 buckets).
 
 Semantics are IDENTICAL to composing the public operators
 (``asof_join`` → ``lag_features`` → ``sessionize`` →
@@ -60,6 +71,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from engine.asof import _PAYLOAD, _TAG, _TS_KEY, _tagged_union
 from engine.cache import tracked_persist
@@ -77,6 +89,13 @@ def _as_list(x: str | Sequence[str]) -> list[str]:
 def _empty_like(col: Column) -> Column:
     """Typed empty array matching ``col``'s element type."""
     return F.slice(col, 1, 0)
+
+
+def _sum_type(dt: T.DataType) -> T.DataType:
+    """Type of a running total of ``dt`` values (as Spark's ``sum``)."""
+    if isinstance(dt, T.DecimalType):
+        return T.DecimalType(38, dt.scale)
+    return T.DoubleType() if isinstance(dt, T.FractionalType) else T.LongType()
 
 
 def fused_feature_chain(
@@ -125,7 +144,7 @@ def fused_feature_chain(
     plan — feed it pre-filtered hot slices). ``hot_keys=[...]`` is the
     whole-pipeline hybrid: listed entities are time-bucketed, everything
     else runs as a plain per-entity group in the same two exchanges, and
-    the carry tables are built from the (tiny, persisted) hot slices only.
+    the carry table is built from the hot buckets only.
     An empty list means "no skew": the plan degenerates to the plain
     single-window chain.
     """
@@ -145,7 +164,7 @@ def fused_feature_chain(
             f"fused chain cannot lag/roll over ffill outputs {sorted(bad_ff)}"
         )
     lags = sorted(set(int(k) for k in lags))
-    k_max = max(lags) if lags else 0
+    k_max = max(lags) if lags and lag_cols else 0
     bucket_us = int(parse_duration_seconds(bucket) * 1_000_000)
     gap_us = (
         int(parse_duration_seconds(session_gap) * 1_000_000)
@@ -234,29 +253,29 @@ def fused_feature_chain(
             return time_b(col)
         return F.when(pred, time_b(col)).otherwise(F.lit(0))
 
-    # rolling partial specs — identical to rolling_aggregates(method="prefix")
-    specs: dict[str, Column] = {}
+    # rolling partials — identical to rolling_aggregates(method="prefix");
+    # name -> (kind, column), ``addend`` maps a value to its partial
+    partials: dict[str, tuple[str, str]] = {}
     for c, names in rolling.items():
-        need = set(names)
-        specs[f"__cn_{c}"] = (
-            F.when(F.col(c).isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        )
-        if need & {"sum", "avg", "mean", "stddev"}:
-            specs[f"__cs_{c}"] = F.col(c)
-        if "stddev" in need:
-            specs[f"__cq_{c}"] = F.col(c) * F.col(c)
-    partials = list(specs)
+        partials[f"__cn_{c}"] = ("n", c)
+        if set(names) & {"sum", "avg", "mean", "stddev"}:
+            partials[f"__cs_{c}"] = ("s", c)
+        if "stddev" in names:
+            partials[f"__cq_{c}"] = ("q", c)
+
+    def addend(kind: str, x: Column) -> Column:
+        if kind == "n":
+            return F.when(x.isNotNull(), F.lit(1)).otherwise(F.lit(0))
+        return x if kind == "s" else x * x
 
     # ---- Exchange 1: one scan, one shuffle, both tags retained ----------
     # The probe∪state union is hash-clustered by (entity, B) and sorted
-    # once; the in-bucket as-of resolution is computed for EVERY row (for a
-    # state row last(payload) up to itself is its own payload, so the
-    # overwrite is the identity on states). The result is persisted and
-    # feeds four consumers — the main probe chain, the per-bucket state
-    # carry, the bucket axis, and the hybrid hot branch — so the fact
-    # tables are scanned exactly once and no carry subtree rescans them
-    # (the previous design's hot-slice scans + second mini-pipeline were
-    # measured at ~0.5 scaling efficiency 4→16 cores: near-constant cost).
+    # once. Two window passes share that order (no re-shuffle, no re-sort):
+    # the first resolves the in-bucket as-of payload of every row (for a
+    # state row it is its own payload), the previous probe's ts and the
+    # probe ordinal; the second computes every in-bucket feature over the
+    # probe rows (prefix cums, session flags, lags, fills) and, over the
+    # whole bucket, the per-bucket totals the carry table is built from.
     unioned, probe_cols = _tagged_union(
         probes, state, keys, probe_ts, state_ts, values, out_names,
         with_state_ts=False,
@@ -271,263 +290,275 @@ def fused_feature_chain(
     # exact). The hash is a pure function of the keys: window groups and
     # exchange co-location are unchanged.
     unioned = unioned.withColumn(_SK, F.xxhash64(*keys))
+    # E1 and E2 rows both lead with (_SK, keys, bucket, ts, tag) so the two
+    # exchanges, sorts and window groupings compile to the same classes
+    lead_cols = [_SK, *keys, _B, _TS_KEY, _TAG]
+    unioned = unioned.select(
+        *lead_cols, *[c for c in unioned.columns if c not in lead_cols]
+    )
     tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
-    w_asof = (
-        Window.partitionBy(_SK, *keys, _B)
-        .orderBy(F.col(_TS_KEY).asc(), tie)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    mid_full = unioned.withColumn(
-        _PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w_asof)
-    )
-    # Persist ONLY what downstream consumers read: every probe row, plus (in
-    # hybrid mode) the hot rows that seed the carry tables. A COLD state row's
-    # whole job ends inside the window pass above — its payload has already
-    # been folded into the probe rows of its group, and the carries are built
-    # from hot slices only — so caching it is pure waste. At the bench's 5%
-    # hot fraction this shrinks the persisted mid-frame ~4x (80M rows -> 20M);
-    # the filter runs in the same stage as the window (no extra exchange) and
-    # preserves the (entity, B) hash partitioning + sort order for the
-    # downstream window reuse. Plain mode (hot_keys=None) keeps everything:
-    # there the carries are built from every entity's state rows.
-    if pred is not None:
-        mid_full = mid_full.where((F.col(_TAG) == 1) | pred)
-    mid_all = tracked_persist(mid_full)
+    w_in = Window.partitionBy(_SK, *keys, _B).orderBy(F.col(_TS_KEY).asc(), tie)
+    earlier = w_in.rowsBetween(Window.unboundedPreceding, -1)
+    ts = F.col(_TS_KEY)
+    is_p = F.col(_TAG) == 1
+    first = F.col("__first")
+    mid = unioned.withColumns({
+        _PAYLOAD: F.coalesce(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(earlier)),
+        "__prn": F.count(F.when(is_p, F.lit(1))).over(earlier),
+        "__first": F.count(F.lit(1)).over(earlier) == 0,
+        **({"__pts": F.last(F.when(is_p, ts), ignorenulls=True).over(earlier)}
+           if gap_us is not None else {}),
+    })
 
-    # ---- as-of cross-bucket carry (tiny, broadcast) ---------------------
-    # Per-(entity, bucket) last state payload (max_by — ties resolved as in
-    # engine.asof._asof_bucketed), forward-filled over the union of probe
-    # and state bucket axes. Hybrid mode restricts to hot entities: a cold
-    # row misses the carry join and coalesces to the no-earlier-bucket
-    # defaults, which is exactly its single-group semantics.
-    carry_src = mid_all if pred is None else mid_all.where(pred)
-    # _SK leads every carry grouping too: it's a pure function of the keys
-    # (groups unchanged) and keeps the carry aggregations satisfiable by the
-    # E1 exchange's (_SK, keys, B) clustering — no re-shuffle of the frame.
-    bucket_last = (
-        carry_src.where(F.col(_TAG) == 0)
-        .groupBy(_SK, *keys, _B)
-        .agg(
-            F.max_by(
-                F.col(_PAYLOAD), F.struct(F.col(_TS_KEY), F.col(_PAYLOAD))
-            ).alias("__fx_pay")
-        )
-    )
-    axis = carry_src.select(_SK, *keys, _B).distinct()
-    w_ff = (
-        Window.partitionBy(_SK, *keys)
-        .orderBy(F.col(_B))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    asof_carry = (
-        axis.join(bucket_last, on=[_SK, *keys, _B], how="left")
-        .withColumn("__fx_carry", F.last("__fx_pay", ignorenulls=True).over(w_ff))
-        .select(_SK, *keys, _B, "__fx_carry")
-    )
+    def v_in(c: str) -> Column:
+        """A probe's in-bucket value of ``c`` (as-of outputs are null on the
+        bucket's leading probes, which take the carried payload instead)."""
+        return F.when(is_p, F.col(_PAYLOAD).getField(c) if c in out_names else F.col(c))
 
-    # ---- second window set over the as-of-resolved probe rows -----------
-    w_rows = Window.partitionBy(_SK, *keys, _B).orderBy(F.col(_TS_KEY))
-    w_range = w_rows.rangeBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy(_SK, *keys, _B)
-    exprs = [
-        F.row_number().over(w_rows).alias("__rn"),
-        F.count(F.lit(1)).over(w_all).alias("__cnt"),
-    ]
+    # the session flag against the bucket's previous probe (null on its
+    # first probe, whose flag comes from the carry)
     if gap_us is not None:
-        exprs.append(F.lag(F.col(_TS_KEY)).over(w_rows).alias("__pts"))
-    for c in lag_cols:
-        for k in lags:
-            exprs.append(F.lag(F.col(c), k).over(w_rows).alias(f"__lg_{c}_{k}"))
-    for p, addend in specs.items():
-        exprs.append(F.sum(addend).over(w_range).alias(f"__cum_{p}"))
-    # in-bucket forward fill: same partitioning+ordering, one more window
-    # expression in the shared pass (no extra exchange)
-    w_cumrows = w_rows.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    for c in ffill_cols:
-        exprs.append(
-            F.last(F.col(c), ignorenulls=True).over(w_cumrows).alias(f"__ff_{c}")
+        pts = F.col("__pts")
+        mid = mid.withColumn(
+            "__fl", F.when(is_p & pts.isNotNull(), (ts - pts > gap_us).cast("int"))
         )
+    if k_max:
+        mid = mid.withColumn("__lgsrc", F.when(is_p, F.struct(
+            F.col(_PAYLOAD).isNull().alias("__l"), *[v_in(c).alias(c) for c in lag_cols]
+        )))
+    upto = w_in.rangeBetween(Window.unboundedPreceding, 0)
+    whole = w_in.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    row_cols = {
+        "__np": F.count(F.when(is_p, F.lit(1))).over(upto),
+        **{f"__cum_{p}": F.sum(addend(k, v_in(c))).over(upto) for p, (k, c) in partials.items()},
+        **{f"__ff_{c}": F.last(v_in(c), ignorenulls=True).over(
+            w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+           for c in ffill_cols},
+    }
+    if gap_us is not None:
+        row_cols["__sess"] = F.sum("__fl").over(upto)
+    prn = F.col("__prn")
+    if k_max:
+        # the bucket's last k_max probes before the row: each holds a
+        # distinct residue of its probe ordinal mod k_max and is the latest
+        # probe of that residue (the k-th earlier probe has residue prn - k)
+        row_cols["__lgs"] = F.array(*[
+            F.max_by(F.col("__lgsrc"), F.when(is_p & (prn % k_max == m), prn)).over(earlier)
+            for m in range(k_max)
+        ])
+    # per-bucket totals (kept on the bucket's first row only)
+    bucket_cols = {
+        # last state payload; ties resolved as in engine.asof._asof_bucketed
+        "__pay": F.max_by(F.col(_PAYLOAD), F.when(~is_p, F.struct(ts, F.col(_PAYLOAD)))),
+        "__nl": F.count(F.when(is_p & F.col(_PAYLOAD).isNull(), F.lit(1))),
+        "__min_ts": F.min(F.when(is_p, ts)),
+        "__max_ts": F.max(F.when(is_p, ts)),
+        **({"__fin": F.sum("__fl")} if gap_us is not None else {}),
+        **{f"__in{p}": F.sum(addend(k, v_in(c))) for p, (k, c) in partials.items()},
+        # last non-null fill value; ties broken on the value (deterministic)
+        **{f"__ffi_{c}": F.max_by(v_in(c), F.when(v_in(c).isNotNull(), F.struct(ts, v_in(c))))
+           for c in ffill_cols},
+    }
+    bucket_cols = {n: e.over(whole) for n, e in bucket_cols.items()}
+    if k_max:
+        # the bucket's last k_max probes, picked the same way
+        tail_row = F.struct(ts.alias("__t"), *[
+            F.col("__lgsrc")[f].alias(f) for f in ("__l", *lag_cols)
+        ])
+        bucket_cols["__tail"] = F.array_sort(F.array_compact(F.array(*[
+            F.max_by(tail_row, F.when(is_p & (prn % k_max == m), prn)).over(whole)
+            for m in range(k_max)
+        ])))
+    mid = mid.select(
+        *[c for c in mid.columns if c not in ("__pts", "__fl", "__lgsrc")],
+        *[e.alias(n) for n, e in row_cols.items()],
+        *[F.when(first, e).alias(n) for n, e in bucket_cols.items()],
+    )
+    # Persist what the two consumers read: every probe row, plus the first
+    # row of each (hot) bucket, which carries the per-bucket totals. The
+    # filter runs in the same stage as the windows, and no consumer needs
+    # the cache's partitioning, so nothing is shuffled again.
+    carry_row = first if pred is None else first & pred
+    mid_all = tracked_persist(mid.where(is_p | carry_row))
 
-    def probe_chain(src: DataFrame) -> DataFrame:
-        """Cached rows → as-of-resolved feature rows with rn / lags /
-        session flag / in-bucket cums. Reads the mid_all cache; the windows
-        reuse its (entity, B) partitioning (sort only, no exchange)."""
-        d = src.where(F.col(_TAG) == 1)
-        d = d.join(F.broadcast(asof_carry), on=[_SK, *keys, _B], how="left")
-        pay = F.coalesce(F.col(_PAYLOAD), F.col("__fx_carry"))
-        d = d.select(
-            _SK,
-            *keys,
-            _B,
-            _TS_KEY,
-            *[c for c in probe_cols if c not in keys],
-            *[pay.getField(n).alias(n) for n in out_names],
-        )
-        m = d.select("*", *exprs)
+    # ---- carry table (tiny, broadcast): one ordered pass per hot entity --
+    # A hot entity's per-bucket totals are collected in bucket order and
+    # folded once; for every bucket holding probes the fold emits the state
+    # carried INTO it: the as-of payload (the last state of any earlier
+    # bucket, state-only buckets included), the session count, the running
+    # partial totals, the last fill values and the last k_max rows. The
+    # leading probes of a bucket all resolve to the carried payload, so its
+    # totals are the in-bucket values plus (#leads x the carry), known in the
+    # same step. No shuffle of the frame, no window: one aggregation, and a
+    # fold linear in the entity's active buckets (plus the pointer copies of
+    # its growing output array).
+    items = mid_all.where(carry_row).groupBy(_SK, *keys).agg(
+        F.array_sort(F.collect_list(F.struct(_B, *bucket_cols))).alias("__ax")
+    )
+    x0 = F.element_at("__ax", 1)  # typed template for the fold's zero
+
+    def lead(c: str, carry: Column) -> Column | None:
+        """The value every leading probe of a bucket takes for ``c``."""
+        return carry.getField(c) if c in out_names else None
+
+    def tot(p: str, x: Column, carry: Column) -> Column:
+        k, c = partials[p]
+        t = F.coalesce(x[f"__in{p}"], F.lit(0))
+        if lead(c, carry) is None:
+            return t
+        return t + F.coalesce(x["__nl"] * addend(k, lead(c, carry)), F.lit(0))
+
+    def resolve_tail(tail: Column, carry: Column) -> Column:
+        return F.transform(tail, lambda t: F.struct(*[
+            (F.when(t["__l"], lead(c, carry)).otherwise(t[c]) if c in out_names else t[c])
+            .alias(c) for c in lag_cols
+        ]))
+
+    sum_t = items.select(
+        *[tot(p, x0, x0["__pay"]).alias(p) for p in partials]
+    ).schema
+    zero = {"carry": F.when(F.lit(False), x0["__pay"])}
+    if gap_us is not None:
+        zero["prev_ts"] = F.lit(None).cast("long")
+        zero["sess"] = F.lit(0).cast("long")
+    if partials:
+        zero["__off"] = F.struct(*[
+            F.lit(0).cast(_sum_type(sum_t[p].dataType)).alias(p) for p in partials
+        ])
+    for c in ffill_cols:
+        zero[f"__ffo_{c}"] = F.when(F.lit(False), x0[f"__ffi_{c}"])
+    if k_max:
+        zero["hist"] = _empty_like(resolve_tail(x0["__tail"], x0["__pay"]))
+
+    def emit(s: Column, x: Column) -> Column:
+        """The carry row of bucket ``x`` given the state ``s`` before it."""
+        cols = [x[_B].alias(_B), s["carry"].alias("__carry"), x["__nl"].alias("__nl")]
         if gap_us is not None:
-            m = m.withColumn(
-                "__flag_in",
-                F.when(
-                    (F.col("__rn") > 1)
-                    & ((F.col(_TS_KEY) - F.col("__pts")) > gap_us),
-                    F.lit(1),
-                ).otherwise(F.lit(0)),
-            )
-        return m
+            # the bucket's first probe opens a session unless the previous
+            # probe (in an earlier bucket) lies within the gap
+            first_flag = F.when(
+                s["prev_ts"].isNull() | (x["__min_ts"] - s["prev_ts"] > gap_us), F.lit(1)
+            ).otherwise(F.lit(0))
+            cols.append((s["sess"] + first_flag).alias("__sess0"))
+        cols += [s[n].alias(n) for n in zero if n.startswith("__")]  # totals, fills
+        if k_max:
+            cols.append(s["hist"].alias("__prevk"))
+        return F.struct(*cols)
 
-    mid = probe_chain(mid_all)
-    # carry-2 source: in hybrid mode an explicit cheap re-window over the
-    # cached HOT rows only (the entity-level filter keeps window groups
-    # complete); plain mode re-windows the full cached frame — a second
-    # sorted pass over the cache instead of a checkpoint materialization.
-    # Either way `mid` itself stays a single-consumer linear plan.
-    mid_c = probe_chain(mid_all if pred is None else mid_all.where(pred))
+    def step(s: Column, x: Column) -> Column:
+        carry = s["carry"]
+        o = emit(s, x)
+        has_p = x["__max_ts"].isNotNull()
+        nxt = {"carry": F.coalesce(x["__pay"], carry)}
+        if gap_us is not None:
+            # a state-only bucket opens no session
+            nxt["prev_ts"] = F.coalesce(x["__max_ts"], s["prev_ts"])
+            nxt["sess"] = F.when(
+                has_p, o["__sess0"] + F.coalesce(x["__fin"], F.lit(0))
+            ).otherwise(s["sess"])
+        if partials:
+            nxt["__off"] = F.struct(*[
+                (s["__off"][p] + tot(p, x, carry)).cast(_sum_type(sum_t[p].dataType)).alias(p)
+                for p in partials
+            ])
+        for c in ffill_cols:
+            ffb = x[f"__ffi_{c}"]
+            if lead(c, carry) is not None:
+                ffb = F.coalesce(ffb, F.when(x["__nl"] > 0, lead(c, carry)))
+            nxt[f"__ffo_{c}"] = F.coalesce(ffb, s[f"__ffo_{c}"])
+        if k_max:
+            cat = F.concat(s["hist"], resolve_tail(x["__tail"], carry))
+            n = F.size(cat)
+            nxt["hist"] = F.when(n > k_max, F.slice(cat, n - k_max + 1, k_max)).otherwise(cat)
+        out = F.when(has_p, F.concat(s["out"], F.array(o))).otherwise(s["out"])
+        return F.struct(*[e.alias(n) for n, e in nxt.items()], out.alias("out"))
 
-    # ---- carry 2 (tiny, broadcast): per-bucket stats + K-row tails ------
-    agg_exprs = [
-        F.min(F.col(_TS_KEY)).alias("__min_ts"),
-        F.max(F.col(_TS_KEY)).alias("__max_ts"),
-        *[F.max(f"__cum_{p}").alias(f"__tot_{p}") for p in partials],
-        # the bucket's last NON-NULL fill value = the in-bucket ffill at the
-        # bucket's last row (null iff the whole bucket is null). Tie-break
-        # like the as-of payload carry: among rows sharing the bucket's max
-        # ts the fill states can differ (a null-value row ordered before a
-        # non-null one carries the OLD fill), and bare max_by picks an
-        # arbitrary tie — max over (ts, fill) is deterministic and
-        # consistent with the engine-chosen-tie contract (r3 advice).
-        *[
-            F.max_by(
-                F.col(f"__ff_{c}"), F.struct(F.col(_TS_KEY), F.col(f"__ff_{c}"))
-            ).alias(f"__ffb_{c}")
-            for c in ffill_cols
-        ],
-    ]
-    if gap_us is not None:
-        agg_exprs.append(F.sum("__flag_in").alias("__fin"))
-    if k_max:
-        tail_struct = F.when(
-            F.col("__rn") > F.col("__cnt") - k_max,
-            F.struct(
-                F.col(_TS_KEY).alias("__t"),
-                *[F.col(c).alias(c) for c in lag_cols],
-            ),
-        )
-        agg_exprs.append(
-            F.array_sort(F.collect_list(tail_struct)).alias("__tail")
-        )
-    c2 = mid_c.groupBy(_SK, *keys, _B).agg(*agg_exprs)
-
-    w_prev = (
-        Window.partitionBy(_SK, *keys)
-        .orderBy(F.col(_B))
-        .rowsBetween(Window.unboundedPreceding, -1)
+    zero_s = [e.alias(n) for n, e in zero.items()]
+    zero_out = _empty_like(F.array(emit(F.struct(*zero_s), x0)))
+    rows = F.aggregate("__ax", F.struct(*zero_s, zero_out.alias("out")), step)["out"]
+    # start offsets for E2: a cutoff of a row in bucket B lands in bucket
+    # B-kh or B-kh-1; when that bucket holds no earlier feature row its base
+    # is the running total before the first feature bucket at or after it,
+    # which lies within the kh + 1 buckets before B.
+    kh = (win_us + 1) // bucket_us
+    if partials:
+        names = [f.name for f in items.select(zero_out).schema[0].dataType.elementType]
+        rows = F.transform(rows, lambda e, i: F.struct(*[e[n].alias(n) for n in names], *[
+            F.element_at(F.filter(
+                F.slice(rows, F.greatest(i - kh - 1, F.lit(0)) + 1, kh + 2),
+                lambda o: o[_B] >= e[_B] - kh - j,
+            ), 1)["__off"].alias(f"__so{j}")
+            for j in (0, 1)
+        ]))
+    carry = items.select(_SK, *keys, F.explode(rows).alias("__r")).select(
+        _SK, *keys, "__r.*"
     )
-    w_lag = Window.partitionBy(_SK, *keys).orderBy(F.col(_B))
-    carry_cols = [_SK, *keys, _B]
-    c2 = c2.withColumn("__prev_c", F.lag("__max_ts").over(w_lag))
-    if gap_us is not None:
-        first_flag = F.when(
-            F.col("__prev_c").isNull()
-            | ((F.col("__min_ts") - F.col("__prev_c")) > gap_us),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        c2 = c2.withColumn("__btot", F.col("__fin") + first_flag)
-        c2 = c2.withColumn(
-            "__sess_off", F.coalesce(F.sum("__btot").over(w_prev), F.lit(0))
-        )
-        c2 = c2.withColumn("__first_flag", first_flag)
-        carry_cols += ["__first_flag", "__sess_off"]
-    for c in ffill_cols:
-        # last non-null fill value over all STRICTLY EARLIER buckets
-        c2 = c2.withColumn(
-            f"__ffo_{c}", F.last(f"__ffb_{c}", ignorenulls=True).over(w_prev)
-        )
-        carry_cols.append(f"__ffo_{c}")
-    for p in partials:
-        c2 = c2.withColumn(f"__off_{p}", F.sum(f"__tot_{p}").over(w_prev))
-        # an all-null addend bucket has a NULL in-bucket cum → NULL total;
-        # its end-of-bucket cum is just the carried-in offset (sum skips nulls)
-        c2 = c2.withColumn(
-            f"__end_{p}",
-            F.coalesce(F.col(f"__off_{p}"), F.lit(0))
-            + F.coalesce(F.col(f"__tot_{p}"), F.lit(0)),
-        )
-        carry_cols.append(f"__off_{p}")
-    if k_max:
-        # last k_max rows over ALL earlier buckets: every indexed bucket is
-        # non-empty, so they lie within the previous k_max buckets' tails
-        tails = [
-            F.coalesce(F.lag("__tail", j).over(w_lag), _empty_like(F.col("__tail")))
-            for j in range(k_max, 0, -1)
-        ]
-        cat = F.concat(*tails) if len(tails) > 1 else tails[0]
-        n = F.size(cat)
-        c2 = c2.withColumn(
-            "__prevk",
-            F.when(n > k_max, F.slice(cat, n - k_max + 1, k_max)).otherwise(cat),
-        )
-        carry_cols.append("__prevk")
-    # consumed by the carry2 broadcast AND the E2 start-offset table —
-    # tiny (|bucketed entities × active buckets|); persisting avoids
-    # re-running the carry window pass per consumer
-    c2 = tracked_persist(c2)
-    carry2 = c2.select(*carry_cols)
 
-    out = mid.join(F.broadcast(carry2), on=[_SK, *keys, _B], how="left")
+    # ---- main chain: probe rows + carry, no further window --------------
+    # Cold rows in hybrid mode miss the carry join: every carried column is
+    # null and falls back to the no-earlier-bucket default, which is exactly
+    # the semantics of their single per-entity group.
+    out = mid_all.where(is_p).drop(*bucket_cols).join(
+        F.broadcast(carry), on=[_SK, *keys, _B], how="left"
+    )
+    carried = F.col("__carry")
+    pay = F.coalesce(F.col(_PAYLOAD), carried)
+    out = out.withColumns({n: pay.getField(n) for n in out_names})
+    # leading probes up to a row: the first min(#probes so far, __nl)
+    n_lead = F.least(F.col("__np"), F.coalesce(F.col("__nl"), F.lit(0)))
 
-    # ffill finals: in-bucket fill, else the cross-bucket carry. Cold rows
-    # in hybrid mode never match carry2: __ffo is null and the in-bucket
-    # fill IS the complete per-entity fill (single group).
-    ffill_names = []
-    for c in ffill_cols:
-        name = c + ffill_suffix
-        ffill_names.append(name)
-        out = out.withColumn(
-            name, F.coalesce(F.col(f"__ff_{c}"), F.col(f"__ffo_{c}"))
+    def cum(p: str) -> Column:
+        """In-bucket prefix cum of partial ``p`` over the resolved values."""
+        k, c = partials[p]
+        in_b = F.coalesce(F.col(f"__cum_{p}"), F.lit(0))
+        if lead(c, carried) is None:
+            return in_b
+        return in_b + F.coalesce(n_lead * addend(k, lead(c, carried)), F.lit(0))
+
+    # ffill finals: in-bucket fill, else the leads' carried value, else the
+    # cross-bucket fill.
+    ffill_names = [c + ffill_suffix for c in ffill_cols]
+    out = out.withColumns({
+        c + ffill_suffix: F.coalesce(
+            F.col(f"__ff_{c}"),
+            *([F.when(F.col("__nl") > 0, lead(c, carried))] if c in out_names else []),
+            F.col(f"__ffo_{c}"),
         )
+        for c in ffill_cols
+    })
 
-    # lag finals: in-bucket lag when enough in-bucket history, else the
-    # (k − rn + 1)-th element from the end of the cross-bucket tail.
-    # Cold rows in hybrid mode never match carry2: __prevk is null, the
-    # fallback is null — correct, a single-group entity has no earlier bucket.
+    # lag finals: the in-bucket lag (a leading row takes the carry), else
+    # the (k − #earlier probes)-th row from the end of the cross-bucket tail.
     lag_names = []
+    lag_exprs = {}
     for c in lag_cols:
         for k in lags:
             name = f"{c}_lag{k}"
             lag_names.append(name)
-            if k_max:
-                idx = F.size(F.col("__prevk")) - (F.lit(k) - F.col("__rn") + 1)
-                fallback = F.get(F.col("__prevk"), idx).getField(c)
-                out = out.withColumn(
-                    name,
-                    F.when(F.col("__rn") > k, F.col(f"__lg_{c}_{k}")).otherwise(
-                        fallback
-                    ),
-                )
-            else:
-                out = out.withColumn(name, F.col(f"__lg_{c}_{k}"))
+            lg = F.get(F.col("__lgs"), F.pmod(prn - k, F.lit(k_max)))
+            own = lg.getField(c)
+            if c in out_names:
+                own = F.when(lg.getField("__l"), lead(c, carried)).otherwise(own)
+            idx = F.size(F.col("__prevk")) - (F.lit(k) - prn)
+            lag_exprs[name] = F.when(prn >= k, own).otherwise(
+                F.get(F.col("__prevk"), idx).getField(c)
+            )
+    out = out.withColumns(lag_exprs)
 
-    # session ids: in-bucket flag cumsum + running earlier-bucket totals.
-    # The no-carry defaults (first row opens a session, zero offset) are the
-    # exact semantics for an entity with no earlier bucket — i.e. cold rows.
+    # session ids: in-bucket flag sum + the bucket's first flag (1 without an
+    # earlier bucket) + running earlier-bucket totals.
     if gap_us is not None:
-        flag = F.when(
-            F.col("__rn") == 1, F.coalesce(F.col("__first_flag"), F.lit(1))
-        ).otherwise(F.col("__flag_in"))
-        w_cum = w_rows.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         out = out.withColumn(
             session_col,
-            (F.sum(flag).over(w_cum) + F.coalesce(F.col("__sess_off"), F.lit(0)))
-            .cast("long"),
+            (
+                F.coalesce(F.col("__sess"), F.lit(0)) + F.coalesce(F.col("__sess0"), F.lit(1))
+            ).cast("long"),
         )
 
     # stitched global prefix cums (peer-inclusive)
-    for p in partials:
-        out = out.withColumn(
-            f"__st_{p}",
-            F.coalesce(F.col(f"__cum_{p}"), F.lit(0))
-            + F.coalesce(F.col(f"__off_{p}"), F.lit(0)),
-        )
+    out = out.withColumns({
+        f"__st_{p}": cum(p) + F.coalesce(F.col("__off")[p], F.lit(0)) for p in partials
+    })
 
     keep = [
         *keys,
@@ -542,15 +573,18 @@ def fused_feature_chain(
 
     # ---- Exchange 2: cutoff resolution for the rolling prefix -----------
     # Byte discipline (r4): only the CUT rows (side 1) survive to the output,
-    # so the state-role rows (side 0) need nothing but (_SK, keys, __key,
-    # __pay) — every pass-through column (probe payload, as-of strings, lag/
-    # session results, and the __st_ partials that side 0 already carries
-    # inside __pay) is NULLED on side 0 before the exchange. UnsafeRow omits
-    # variable-length data for null fields, so this roughly halves the
-    # variable bytes the 2×-row explode pushes through the second shuffle —
-    # the r3 protocol's residual 4→16 decay was memory bandwidth, and this
-    # exchange moved the widest rows in the plan. _TS_KEY is dropped
-    # entirely (its information lives on in __key).
+    # so every pass-through column (probe payload, as-of strings, lag/session
+    # results, the start offset, and the __st_ partials that side 0 already
+    # carries inside __pay) is NULLED on side 0 before the exchange. UnsafeRow
+    # omits variable-length data for null fields, so this roughly halves the
+    # variable bytes the 2×-row explode pushes through the second shuffle (the
+    # r3 protocol's residual 4→16 decay was memory bandwidth). _TS_KEY is
+    # dropped entirely (its information lives on in __key).
+    out = out.withColumn(
+        "__sob",
+        F.when(time_b(ts - F.lit(win_us + 1)) == F.col(_B) - kh, F.col("__so0"))
+        .otherwise(F.col("__so1")),
+    )
     pay2 = F.struct(*[F.col(f"__st_{p}").alias(p) for p in partials])
     role = F.explode(
         F.array(
@@ -568,7 +602,7 @@ def fused_feature_chain(
     )
     passthrough = [c for c in keep if c not in keys] + [
         f"__st_{p}" for p in partials
-    ]
+    ] + ["__sob"]
     e = out.select(
         _SK,
         *keys,
@@ -580,12 +614,12 @@ def fused_feature_chain(
     e = e.select(
         _SK,
         *keys,
-        "__side",
+        bucket_of(F.col("__key")).alias("__rb"),
         "__key",
+        "__side",
         "__pay",
         *[F.when(is_cut, F.col(c)).alias(c) for c in passthrough],
     )
-    e = e.withColumn("__rb", bucket_of(F.col("__key")))
     w_res = (
         Window.partitionBy(_SK, *keys, "__rb")
         .orderBy(F.col("__key").asc(), F.col("__side").asc())
@@ -593,46 +627,10 @@ def fused_feature_chain(
     )
     resolved = e.withColumn("__base", F.last("__pay", ignorenulls=True).over(w_res))
     cut = resolved.where(F.col("__side") == 1)
-
-    # start offsets: for a cutoff landing in a bucket with no earlier
-    # feature row, the base is the stitched cum at the end of the last
-    # feature bucket strictly BEFORE it — an as-of over the tiny bucket
-    # axis. Hot-only in hybrid mode: a cold cutoff shares its rows' single
-    # bucket, so a missing base correctly falls back to zero.
-    kh = (win_us + 1) // bucket_us
-    ends = c2.select(
-        _SK,
-        *keys,
-        F.col(_B).alias("__rb"),
-        F.struct(*[F.col(f"__end_{p}").alias(p) for p in partials]).alias("__so"),
-        F.lit(1).alias("__kind"),
-    )
-    so_type = ends.schema["__so"].dataType
-    cand = (
-        c2.select(
-            _SK,
-            *keys,
-            F.explode(
-                F.array(F.col(_B) - F.lit(kh), F.col(_B) - F.lit(kh + 1))
-            ).alias("__rb"),
-        )
-        .distinct()
-        .withColumn("__so", F.lit(None).cast(so_type))
-        .withColumn("__kind", F.lit(0))
-    )
-    w_so = (
-        Window.partitionBy(_SK, *keys)
-        .orderBy(F.col("__rb").asc(), F.col("__kind").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    so = (
-        ends.unionByName(cand)
-        .withColumn("__so", F.last("__so", ignorenulls=True).over(w_so))
-        .where(F.col("__kind") == 0)
-        .select(_SK, *keys, "__rb", "__so")
-    )
-    cut = cut.join(F.broadcast(so), on=[_SK, *keys, "__rb"], how="left")
-    base = F.coalesce(F.col("__base"), F.col("__so"))
+    # a cutoff with no earlier feature row in its bucket starts from the
+    # carried start offset (hot rows only: a cold cutoff shares its rows'
+    # single bucket, so a missing base correctly falls back to zero)
+    base = F.coalesce(F.col("__base"), F.col("__sob"))
 
     def minus(p: str) -> Column:
         return F.col(f"__st_{p}") - F.coalesce(base.getField(p), F.lit(0))

@@ -82,17 +82,45 @@ def exchange_schemas(plan: str) -> str:
     return "\n".join(out)
 
 
-def section(title: str, desc: str, df, max_exchanges: int | None = None) -> str:
+def execution_cost(df) -> tuple[int, int]:
+    """(generated classes compiled, Spark jobs run) by one execution of
+    ``df`` to the noop sink. Classes already in Spark's codegen cache are
+    not compiled again, so a repeated execution should report 0."""
+    spark = df.sparkSession
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-audit", "plan audit execution")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("plan-audit"))
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    df.write.format("noop").mode("overwrite").save()
+    classes = metrics.METRIC_COMPILATION_TIME().getCount() - before
+    return classes, len(sc.statusTracker().getJobIdsForGroup("plan-audit")) - jobs
+
+
+def section(title: str, desc: str, df, max_exchanges: int | None = None,
+            max_classes: int | None = None) -> str:
     """``max_exchanges``: hard gate — the audit FAILS if the plan needs more
     real exchanges than the design claims (shape regressions surface here,
-    not at 100 TB)."""
+    not at 100 TB). ``max_classes``: hard gate on the generated classes one
+    execution compiles (Spark's codegen cache holds 100 by default; a plan
+    above it recompiles on every execution) — the section executes the plan
+    twice and the second execution must compile nothing."""
     p = plan_of(df)
     if max_exchanges is not None:
         n_ex = len(re.findall(r"^\(\d+\) Exchange\b", p, re.M))
         assert n_ex <= max_exchanges, (
             f"{title}: {n_ex} exchanges > allowed {max_exchanges}\n{p[:2000]}"
         )
-    return f"## {title}\n\n{desc}\n\n```\n{stats(df, p)}\n```\n\n<details><summary>full plan</summary>\n\n```\n{p}\n```\n\n</details>\n"
+    summary = stats(df, p)
+    if max_classes is not None:
+        (classes, jobs), (again, _) = execution_cost(df), execution_cost(df)
+        assert classes <= max_classes and again == 0, (
+            f"{title}: one execution compiled {classes} classes (allowed "
+            f"{max_classes}), a second {again}"
+        )
+        summary += (f"\none execution: compiled classes={classes} (second "
+                    f"execution {again}), spark jobs={jobs}")
+    return f"## {title}\n\n{desc}\n\n```\n{summary}\n```\n\n<details><summary>full plan</summary>\n\n```\n{p}\n```\n\n</details>\n"
 
 
 def main() -> None:
@@ -138,10 +166,10 @@ def main() -> None:
 
     # Fused feature chain (engine/fused.py): the whole as-of + lag +
     # sessionize + rolling pipeline in TWO fact-scale exchanges. The carry
-    # tables add a handful of exchanges, but each runs over the aggregated
-    # |entities x buckets| frame (tiny) — assert the total stays bounded and
-    # that the mid-frame cache is actually reused (InMemoryTableScan) instead
-    # of duplicating the fact subtree per consumer.
+    # table adds one exchange of its per-bucket totals (tiny) — assert the
+    # total stays bounded, that the mid-frame cache is actually reused
+    # (InMemoryTableScan) instead of duplicating the fact subtree per
+    # consumer, and that one execution fits Spark's codegen cache.
     from engine.fused import fused_feature_chain
 
     fz = fused_feature_chain(
@@ -157,17 +185,20 @@ def main() -> None:
         "Fused feature chain (hybrid hot/cold, two fact-scale exchanges)",
         "as-of + lag + sessionize + 1h prefix rolling compiled together: the "
         "fact rows cross exactly two wide exchanges (the (entity, bucket) "
-        "union shuffle and the rolling-cutoff resolution); every other "
-        "exchange below operates on the per-(entity, bucket) carry frames "
-        "(|entities x active buckets| rows, broadcast back). The persisted "
-        "mid-frame shows up as InMemoryTableScan for all four consumers — "
-        "hard-asserted, along with the exchange cap.\n\n"
+        "union shuffle and the rolling-cutoff resolution); the third "
+        "exchange carries the per-(entity, bucket) totals (|hot entities x "
+        "active buckets| rows) to the one-pass carry fold, whose table is "
+        "broadcast back. The persisted mid-frame shows up as "
+        "InMemoryTableScan for both consumers — hard-asserted, along with "
+        "the exchange cap and the generated-class budget (<= 60 classes for "
+        "one execution, 0 for a second; Spark's codegen cache holds 100).\n\n"
         "Exchange schemas (what each shuffle serializes per row; the E2 "
         "cutoff exchange's pass-through columns are NULLED on the 2x-explode "
         "state rows, so its variable bytes are ~halved — r4 bytes-per-row "
         "work):\n\n" + exchange_schemas(fz_plan),
         fz,
-        max_exchanges=8,
+        max_exchanges=3,
+        max_classes=60,
     ))
 
     # Production lowering (r3): the SAME fused shape must come out of the
@@ -191,9 +222,10 @@ def main() -> None:
         "The identical pipeline expressed through the FeaturePlan IR "
         "(what `jobs/featuregen.py --asof-strategy hybrid` runs) lowers to "
         "the SAME two-fact-scale-exchange fused plan — hard-asserted at the "
-        "same exchange cap as the direct call above.",
+        "same exchange cap and class budget as the direct call above.",
         lowered,
-        max_exchanges=8,
+        max_exchanges=3,
+        max_classes=60,
     ))
 
     orders = read_table(spark, SF, "orders").select("o_custkey", "o_totalprice")

@@ -29,7 +29,10 @@ def sides(seq_fixtures):
     return probes, ev
 
 
-def reference_chain(probes, ev, window=WIN, gap=GAP):
+ROLL = {"fvalue_last": ["count", "sum", "avg"]}
+
+
+def reference_chain(probes, ev, window=WIN, gap=GAP, rolling=ROLL):
     f = asof_join(
         probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
         values=["fvalue", "fcat"], suffix="_last",
@@ -37,8 +40,7 @@ def reference_chain(probes, ev, window=WIN, gap=GAP):
     f = lag_features(f, "doc_id", "asof_ts", ["fvalue_last"], lags=[1, 2])
     f = sessionize(f, "doc_id", "asof_ts", gap=gap)
     return rolling_aggregates(
-        f, "doc_id", "asof_ts", {"fvalue_last": ["count", "sum", "avg"]},
-        window=window, method="prefix",
+        f, "doc_id", "asof_ts", rolling, window=window, method="prefix",
     )
 
 
@@ -141,13 +143,79 @@ def test_fused_hybrid_all_hot(sides):
     )
 
 
-def fused_chain_hybrid(probes, ev, bucket, hot_keys, window=WIN, gap=GAP):
+def fused_chain_hybrid(probes, ev, bucket, hot_keys, window=WIN, gap=GAP, rolling=ROLL):
     return fused_feature_chain(
         probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
         values=["fvalue", "fcat"], suffix="_last",
         lag_cols=["fvalue_last"], lags=[1, 2],
-        session_gap=gap, rolling={"fvalue_last": ["count", "sum", "avg"]},
+        session_gap=gap, rolling=rolling,
         rolling_window=window, bucket=bucket, hot_keys=hot_keys,
+    )
+
+
+def test_fused_hybrid_fits_codegen_cache(sides, spark):
+    """A routed chain compiles at most 60 generated classes and a second
+    execution compiles none: the plan fits Spark's codegen cache at its
+    default size. (A bucket no other test uses keeps the literals fresh.)"""
+    probes, ev = sides
+    probes.count(), ev.count()  # the cached inputs are not the chain's work
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "100"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled():
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        fused_chain_hybrid(probes, ev, "5 hours", hot_keys=[HOT]).write.format(
+            "noop").mode("overwrite").save()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    first, second = compiled(), compiled()
+    assert first <= 60 and second == 0, (first, second)
+
+
+def edge_sides(spark):
+    """Hand-built rows on 1-hour buckets for the carry edge cases: bucket 1's
+    probes all precede its first state row, bucket 2's states all hold a
+    null fvalue, buckets 3-5 are empty and bucket 7 holds only a state, so
+    the lag tails of buckets 6 and 8 reach back across them."""
+    import datetime as dt
+
+    cold = "doc000000000001"
+    ev = [
+        (HOT, 0, 10, 1.0, "a"), (HOT, 0, 20, 2.0, "b"), (HOT, 1, 40, 3.0, "c"),
+        (HOT, 2, 5, None, "d"), (HOT, 2, 10, None, "e"), (HOT, 7, 30, 5.0, "f"),
+        (cold, 0, 15, 4.0, "g"), (cold, 3, 0, None, "h"),
+    ]
+    pr = [
+        (HOT, 0, 5), (HOT, 0, 15), (HOT, 0, 30), (HOT, 1, 5), (HOT, 1, 10),
+        (HOT, 2, 20), (HOT, 2, 30), (HOT, 6, 10), (HOT, 8, 10), (HOT, 8, 50),
+        (cold, 0, 20), (cold, 2, 0), (cold, 3, 30),
+    ]
+
+    def at(h, m):
+        return dt.datetime(2024, 1, 1) + dt.timedelta(hours=h, minutes=m)
+
+    events = spark.createDataFrame(
+        [(d, at(h, m), v, c) for d, h, m, v, c in ev],
+        "doc_id string, ts timestamp, fvalue double, fcat string",
+    ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    probes = spark.createDataFrame(
+        [(d, at(h, m), i) for i, (d, h, m) in enumerate(pr)],
+        "doc_id string, asof_ts timestamp, probe_id long",
+    ).withColumn("asof_ts", F.col("asof_ts").cast("timestamp_ntz"))
+    return probes, events
+
+
+@pytest.mark.parametrize("hot", [[HOT], None])
+def test_fused_carry_edge_cases(spark, hot):
+    """Leading-probe, all-null, empty-bucket and stddev carries: routed
+    (hot_keys=[HOT]) and fully bucketed (None) chains equal the composition,
+    with stddev exercising the sum-of-squares carry."""
+    probes, ev = edge_sides(spark)
+    roll = {"fvalue_last": ["count", "sum", "avg", "stddev"]}
+    assert_equal(
+        reference_chain(probes, ev, window="3 hours", gap="45 minutes", rolling=roll),
+        fused_chain_hybrid(probes, ev, "1 hour", hot_keys=hot, window="3 hours",
+                           gap="45 minutes", rolling=roll),
     )
 
 
