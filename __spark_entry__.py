@@ -89,10 +89,13 @@ def q_asof_union(spark, sf_dir):
 
 
 def q_asof_merge(spark, sf_dir):
+    """A1 as the spec names it, a sorted-partition as-of merge: hash
+    partition by entity, secondary sort by event time, last-known value.
+    The union kernel is exactly that plan (one exchange, one window)."""
     probes, state = _probe_state(spark, sf_dir)
     return asof_join(
         probes, state, on="user_id", probe_ts="ts", state_ts="ts",
-        values=["value", "etype"], suffix="_last", strategy="merge",
+        values=["value", "etype"], suffix="_last", strategy="union",
     )
 
 
@@ -1715,29 +1718,31 @@ def q_grouping_sets(spark, sf_dir):
 
 def q_hotwin_family(spark, sf_dir):
     """W8 oracle coverage: the full per-entity window family (ffill → lag →
-    sessionize → prefix rolling) with a hot-key list routing users 0-4
-    through the time-bucketed skew-proof plans (engine/hotwin.py). Semantics
-    are identical to the plain single-window plans — the oracle is plain
-    window SQL. (This intentionally exercises the public per-op hot_keys=
-    API; production pipelines split once per pipeline via engine.plan.lower.)"""
-    hot = [0, 1, 2, 3, 4]
-    bucket = "6 hours"
-    e = _events_with_nulls(spark, sf_dir)
-    f = forward_fill(e, "user_id", "ts", ["value_n"], out_suffix="_f",
-                     hot_keys=hot, bucket=bucket)
-    f = lag_features(f, "user_id", "ts", ["value_n_f"], lags=[1],
-                     hot_keys=hot, bucket=bucket)
-    f = sessionize(f, "user_id", "ts", gap="30 minutes",
-                   hot_keys=hot, bucket=bucket)
-    f = f.withColumn("vdec", F.col("value_n_f").cast("decimal(18,2)"))
-    r = rolling_aggregates(f, "user_id", "ts", {"vdec": ["count", "sum"]},
-                           window="1 hour", method="prefix",
-                           hot_keys=hot, bucket=bucket)
+    sessionize → prefix rolling) as one FeaturePlan lowered with users 0-4
+    hot: no as-of step leads the plan, so lower() splits it once into a
+    plain cold chain and a hot chain of the time-bucketed plans
+    (engine/hotwin.py, bucketed as-of for the rolling cutoff). Semantics are
+    identical to the plain single-window plans — the oracle is plain window
+    SQL. ``vdec_n`` is the decimal copy of ``value_n`` that makes the prefix
+    sums exact."""
+    from engine.plan import FeatureEngine
+
+    e = _events_with_nulls(spark, sf_dir).withColumn(
+        "vdec_n", F.col("value_n").cast("decimal(18,2)")
+    )
+    r = (
+        FeatureEngine(e, entity="user_id", ts="ts")
+        .ffill(["value_n", "vdec_n"], out_suffix="_f")
+        .lag(["value_n_f"], lags=[1])
+        .sessionize("30 minutes")
+        .rolling({"vdec_n_f": ["count", "sum"]}, "1 hour", method="prefix")
+        .to_df(hot_keys=[0, 1, 2, 3, 4], bucket="6 hours")
+    )
     return r.select(
         "event_id", "user_id", "ts", "value_n", "value_n_f",
         "value_n_f_lag1", "session_id",
-        F.col("vdec_count_1hour").alias("n_1h"),
-        F.col("vdec_sum_1hour").cast("double").alias("sum_1h"),
+        F.col("vdec_n_f_count_1hour").alias("n_1h"),
+        F.col("vdec_n_f_sum_1hour").cast("double").alias("sum_1h"),
     )
 
 
@@ -2055,7 +2060,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (tests/test_tail_oracle.py); the named cover keeps the kernel
         # exercised inside the current driver window.
         "sessionize": q_sessionize,          # cover: session_agg, fused_chain
-        "asof_bucketed": q_asof_bucketed,    # cover: asof_merge (same oracle), fused_chain hybrid
+        "asof_bucketed": q_asof_bucketed,    # cover: hotwin_family (its hot rolling cutoff runs this kernel)
         "rollup_events": q_rollup_events,    # cover: grouping_sets (same GROUPING SETS engine path)
         "cube_events": q_cube_events,        # cover: grouping_sets
         "session_window_agg": q_session_window_agg,  # cover: session_agg (same agg; streaming variant pytest-checked)
@@ -2063,7 +2068,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup": q_embedding_near_dup,  # cover: embedding_near_dup_lsh (same verify kernel)
         "ann_lsh_topk": q_ann_lsh_topk,      # cover: ann_lsh_multitable (superset, L=1 special case)
         # r5-demoted twins (driver-green in CORRECTNESS_r04.json):
-        "asof_union": q_asof_union,          # cover: asof_merge (identical oracle, A1 union strategy)
+        "asof_union": q_asof_union,          # cover: asof_merge (identical oracle, same union kernel)
         "asof_strict": q_asof_strict,        # cover: asof_merge (same kernel, <= -> < flag)
         "bfill": q_bfill,                    # cover: ffill (same carry kernel, reversed frame)
         "minmax": q_minmax,                  # cover: direct_features (same column-transform family)

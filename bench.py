@@ -271,21 +271,8 @@ def flagship_pipeline(spark, root: str, strategy: str = "hybrid", hot_keys=None,
                 "doc_id", n, cores=spark.sparkContext.defaultParallelism,
                 sample_fraction=0.05,
             )
-        # AFG_FCAT_DICT=1: dictionary-encode the low-cardinality fcat
-        # string to an int code BEFORE exchange 1 and decode right after
-        # the fused chain (r4 verdict task #6 A/B). The string's UnsafeRow
-        # cost (8 B offset/len + padded bytes) rides E1 inside the payload
-        # struct and E2 as side-1 pass-through; the code is one fixed 8 B
-        # slot. The substring encode is the measurement probe (zero extra
-        # compute, isolates exchange bytes); a production dictionary is a
-        # broadcast dim join with the identical exchange effect. Verdict of
-        # the measured A/B lives in BENCH/envelope.json (fcat_dict_ab).
-        fcat_dict = os.environ.get("AFG_FCAT_DICT", "0") == "1"
-        ev_in = ev
-        if fcat_dict:
-            ev_in = ev.withColumn("fcat", F.substring("fcat", 4, 8).cast("int"))
         feat = fused_feature_chain(
-            probes, ev_in, on="doc_id", probe_ts="asof_ts", state_ts="ts",
+            probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
             values=["fvalue", "fcat"], suffix="_last",
             lag_cols=["fvalue_last"], lags=[1, 2],
             session_gap="1 hour",
@@ -294,13 +281,6 @@ def flagship_pipeline(spark, root: str, strategy: str = "hybrid", hot_keys=None,
             bucket=BUCKET_US / 1e6,
             hot_keys=hot,
         )
-        if fcat_dict:
-            # decode before the persist so everything downstream (stats,
-            # token join, output schema) is byte-identical to the baseline
-            feat = feat.withColumn(
-                "fcat_last",
-                F.concat(F.lit("cat"), F.col("fcat_last").cast("string")),
-            )
     else:
         feat = plain_chain(probes, ev)
     # The feature frame feeds BOTH outputs — cache it (narrow columns, no
@@ -375,15 +355,8 @@ def run_bench(cores: int) -> dict:
     # plan with the same task count and the rows measure per-core speed,
     # not task-overhead amortization. The flagship (the protocol's actual
     # measurement) runs at the full pinned 128 width below.
-    # asof_merge stays at the full width: its cogrouped Arrow merge stage
-    # is genuinely partition-parallel (6.4 s@4 -> 2.3 s@16 in r3) and the
-    # pin would serialize it to 8 pandas tasks.
-    unpinned = {"asof_merge"}
     for n in names:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(SHUFFLE_WIDTH if n in unpinned else SMALL_QUERY_WIDTH),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(SMALL_QUERY_WIDTH))
         # best-of-3 with isolation per rep: rep 1 compiles codegen, later reps
         # are the steady-state engine cost; min is the standard estimator here
         # (3 reps, not 2: at sf0.1 these queries run 0.2-8 s, where one GC

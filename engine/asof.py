@@ -6,39 +6,26 @@ semantics)" with zero temporal leakage (BASELINE.json:14). SURVEY.md §2.3 A1/A2
 
 Two physical strategies, identical semantics (tests assert equality):
 
-* ``strategy="union"`` (default, pure JVM): tag the two sides, ``unionByName``,
-  one window ``last(payload, ignorenulls).over(partitionBy(entity).orderBy(ts,
-  tie))``, keep probe rows. ONE shuffle, whole-stage-codegen friendly, no
-  Python worker — the fast path at 10^12 rows.
-
-* ``strategy="merge"`` (the spec-named sorted-partition merge): hash-partition
-  both sides by entity (cogroup), secondary-sort by event time inside each
-  group, ``pd.merge_asof`` per group in an Arrow-batched Python stage. Kept as
-  the named-by-spec physical plan and as an independent implementation for the
-  equivalence test; also the extension point for merge kernels pandas has but
-  SQL windows don't.
+* ``strategy="union"`` (default, pure JVM): the spec's sorted-partition merge
+  expressed as one window. Tag the two sides, ``unionByName``, then
+  ``last(payload, ignorenulls).over(partitionBy(entity).orderBy(ts, tie))``
+  and keep the probe rows: hash partition by entity, secondary sort by event
+  time, last-known value. ONE shuffle, whole-stage-codegen friendly, no
+  Python worker.
 
 * ``strategy="bucketed"`` (skew-proof, pure JVM): the explicit-salting answer
   for HOT entities (BASELINE.json:6 "explicit salting for skewed doc_id
   keys"). Window functions get no help from AQE skew handling — a key holding
-  20% of rows becomes one serial task under the other strategies (Amdahl
+  20% of rows becomes one serial task under the union strategy (Amdahl
   ceiling). Here the window partitions by ``(entity, time_bucket)`` so a hot
   entity's timeline splits across buckets; probes whose bucket holds no
   earlier state take a carry-in: the per-(entity, bucket) last state payload,
   forward-filled across buckets on a table that is |entities × active
-  buckets| — tiny relative to the fact table WHEN keys are hot. Identical
-  semantics (equality asserted in tests), unbounded parallelism in the time
-  dimension. Overhead note: when applied to millions of COLD keys the carry
-  table degenerates to fact-table cardinality — that is what ``hybrid`` is
-  for.
-
-* ``strategy="hybrid"`` (the production default for skewed corpora): one
-  cheap partial-aggregated count per key decides, per entity, which physical
-  path it takes — keys above ``hot_threshold`` rows go through the bucketed
-  time-split path (parallel despite skew), the long tail goes through the
-  plain union window (zero overhead). Results are unioned; semantics
-  identical. This is the standard hot/cold split used for skewed shuffles,
-  applied to the as-of axis where AQE cannot help.
+  buckets| — tiny relative to the fact table WHEN keys are hot. Applied to
+  millions of COLD keys the carry table degenerates to fact-table
+  cardinality, so hot keys are routed here per pipeline, not per operator:
+  ``engine.plan.lower(hot_keys=...)`` (fused chain or the hot branch of the
+  split lowering).
 
 Last-known-value semantics match ``pd.merge_asof(direction='backward')``: the
 probe receives the values of the most recent state ROW (which may itself hold
@@ -57,7 +44,6 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -83,10 +69,7 @@ def asof_join(
     strategy: str = "union",
     suffix: str = "",
     include_state_ts: str | None = None,
-    num_partitions: int | None = None,
     bucket: str | int | float = "1 day",
-    hot_threshold: int | None = None,
-    hot_keys: list | None = None,
     persist_intermediate: bool = False,
 ) -> DataFrame:
     """Backward as-of join: each probe row gains the latest state values.
@@ -98,22 +81,14 @@ def asof_join(
         probe_ts / state_ts: event-time columns (state_ts defaults to probe_ts).
         values: state columns to fetch (default: all but key + ts).
         strict: True → only state with ts strictly < probe ts (no exact ties).
-        strategy: "union" (JVM window) or "merge" (cogrouped pd.merge_asof).
+        strategy: "union" (one entity window) or "bucketed" (time-split).
         suffix: appended to fetched value column names (collision control).
         include_state_ts: if set, also emit the matched state timestamp under
             this name (null when no match).
-        num_partitions: explicit shuffle width for the merge strategy.
         bucket: time-bucket width for the bucketed strategy (SQL interval
             string, e.g. "1 day", "6 hours") — pick ~(time span / desired
             per-hot-key parallelism).
-        hot_threshold: (hybrid) combined probe+state rows per key above which
-            the key is routed through the bucketed path. None → auto: 4× the
-            mean rows per shuffle partition, floored at 100_000 — i.e. a key
-            only counts as hot when it would meaningfully unbalance a task.
-        hot_keys: (hybrid) explicit pre-detected hot keys (e.g. from
-            ``engine.skew.detect_hot_keys``) — skips the count job, so a
-            pipeline detecting once can share the list across operators.
-        persist_intermediate: (bucketed/hybrid) cache the tagged union that
+        persist_intermediate: (bucketed) cache the tagged union that
             the bucketed plan's three consumers (in-bucket window, per-bucket
             last-state aggregate, bucket axis) all read — one evaluation
             instead of three. MEMORY_AND_DISK; intended when the input is
@@ -132,20 +107,10 @@ def asof_join(
             probes, state, keys, probe_ts, state_ts, values, out_names,
             strict, include_state_ts,
         )
-    if strategy == "merge":
-        return _asof_merge(
-            probes, state, keys, probe_ts, state_ts, values, out_names,
-            strict, include_state_ts, num_partitions,
-        )
     if strategy == "bucketed":
         return _asof_bucketed(
             probes, state, keys, probe_ts, state_ts, values, out_names,
             strict, include_state_ts, bucket, persist_intermediate,
-        )
-    if strategy == "hybrid":
-        return _asof_hybrid(
-            probes, state, keys, probe_ts, state_ts, values, out_names,
-            strict, include_state_ts, bucket, hot_threshold, hot_keys,
         )
     raise ValueError(f"unknown asof strategy: {strategy!r}")
 
@@ -330,142 +295,3 @@ def _asof_bucketed(
     return resolved.select(
         *_probe_projection(probe_cols, keys, out_names, include_state_ts)
     )
-
-
-_MAX_HOT_KEYS = 10_000
-
-
-def _asof_hybrid(
-    probes: DataFrame,
-    state: DataFrame,
-    keys: list[str],
-    probe_ts: str,
-    state_ts: str,
-    values: list[str],
-    out_names: list[str],
-    strict: bool,
-    include_state_ts: str | None,
-    bucket: str,
-    hot_threshold: int | None,
-    hot_keys: list | None = None,
-) -> DataFrame:
-    """Hot/cold split: bucketed path for keys whose row count would serialize
-    a window task, plain union window for the long tail.
-
-    The hot-key scan is one partially-aggregated count (map-side combine means
-    the shuffle carries ~one row per key, not per fact row); the driver
-    collects at most ``_MAX_HOT_KEYS`` hot keys and compiles them into a
-    literal predicate, so both branch filters push down to the scans. With no
-    hot keys this degenerates to the union strategy at zero extra plan cost.
-    """
-    spark = probes.sparkSession
-    if hot_keys is None:
-        if hot_threshold is None:
-            # keys that would meaningfully unbalance one shuffle task: 4x the
-            # mean rows per partition, floored so small inputs never split
-            n = probes.count() + state.count()
-            parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            hot_threshold = max(100_000, (4 * n) // max(parts, 1))
-        hot_keys = (
-            probes.select(*keys)
-            .unionByName(state.select(*keys))
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__afg_n"))
-            .where(F.col("__afg_n") >= hot_threshold)
-            .select(*keys)
-            .limit(_MAX_HOT_KEYS + 1)
-            .collect()
-        )
-    args = (keys, probe_ts, state_ts, values, out_names, strict, include_state_ts)
-    if not hot_keys:
-        return _asof_union(probes, state, *args)
-    if len(hot_keys) > _MAX_HOT_KEYS:
-        # pathological: most keys hot — time-split everything
-        return _asof_bucketed(probes, state, *args, bucket)
-
-    from engine.hotwin import hot_predicate
-
-    pred = hot_predicate(keys, hot_keys)
-
-    cold = _asof_union(probes.where(~pred), state.where(~pred), *args)
-    # hot side is bounded (≤ _MAX_HOT_KEYS keys), so caching its tagged
-    # union across the bucketed plan's three consumers is safe
-    hot = _asof_bucketed(
-        probes.where(pred), state.where(pred), *args, bucket,
-        persist_intermediate=True,
-    )
-    return cold.unionByName(hot)
-
-
-def _asof_merge(
-    probes: DataFrame,
-    state: DataFrame,
-    keys: list[str],
-    probe_ts: str,
-    state_ts: str,
-    values: list[str],
-    out_names: list[str],
-    strict: bool,
-    include_state_ts: str | None,
-    num_partitions: int | None,
-) -> DataFrame:
-    import pyspark.sql.types as T
-
-    probe_cols = probes.columns
-    ts_alias = "__mstate_ts"
-    # Explicit pruning before the Python stage (SURVEY.md §4: Catalyst cannot
-    # prune through applyInPandas). Rename state columns to be disjoint from
-    # probe columns FIRST: cogroup drops right-side columns that collide with
-    # left-side names (observed on Spark 4.1).
-    state_sel = state.select(
-        *keys,
-        F.col(state_ts).alias(ts_alias),
-        *[F.col(v).alias(n) for v, n in zip(values, out_names)],
-    )
-    probe_sel = probes.select(*probe_cols)
-
-    out_fields = list(probes.schema.fields) + [
-        T.StructField(n, state.schema[v].dataType, True)
-        for v, n in zip(values, out_names)
-    ]
-    if include_state_ts:
-        out_fields.append(T.StructField(include_state_ts, T.TimestampNTZType(), True))
-    out_schema = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-    if set(out_names) & set(probe_cols):
-        raise ValueError(
-            f"merge strategy needs disjoint output names; pass a suffix "
-            f"(collisions: {sorted(set(out_names) & set(probe_cols))})"
-        )
-    allow_exact = not strict
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=out_cols)
-        if right.empty:
-            # Spark may pass an empty, even column-less, frame when this key
-            # has no state rows: all fetched values are null.
-            out = left.copy()
-            for n in out_names:
-                out[n] = None
-            if include_state_ts:
-                out[include_state_ts] = pd.NaT
-            return out[out_cols]
-        left = left.sort_values(probe_ts, kind="mergesort")
-        if include_state_ts:
-            right[include_state_ts] = right[ts_alias]
-        right = right.drop(columns=keys).sort_values(ts_alias, kind="mergesort")
-        merged = pd.merge_asof(
-            left,
-            right,
-            left_on=probe_ts,
-            right_on=ts_alias,
-            direction="backward",
-            allow_exact_matches=allow_exact,
-        )
-        return merged[out_cols]
-
-    lg = probe_sel.groupBy(*keys)
-    rg = state_sel.groupBy(*keys)
-    result = lg.cogroup(rg).applyInPandas(merge, schema=out_schema)
-    return result

@@ -22,10 +22,11 @@ boundaries with carry tables that hold ONE row per (entity, active bucket):
 * expanding sums (the prefix-rolling primitive): in-bucket RANGE cumsum +
   running sum of per-bucket totals from earlier buckets.
 
-These are not exposed directly: the public ops in ``engine.window_ops`` take
-``hot_keys=``/``bucket=`` and route hot keys here while cold keys keep the
-plain single-window plan (zero overhead for the long tail). Equality with
-the plain plans is asserted in tests/test_hotwin.py.
+These are not exposed directly: ``engine.plan.lower(hot_keys=...)`` routes
+the hot branch of a plan here (``_lower_hot_step``) when the plan does not
+fit the fused chain, while cold keys keep the plain single-window plan
+(zero overhead for the long tail). Equality with the plain plans is
+asserted in tests/test_hotwin.py.
 """
 
 from __future__ import annotations
@@ -55,12 +56,13 @@ def hot_predicate(entity: str | Sequence[str], hot_keys: list) -> Column:
     holds scalar values for a single-column entity, tuples/Rows otherwise.
 
     Single-column keys compile to ``isin`` (Catalyst In/InSet — O(1) set
-    probe, push-down-able, and safe for the up-to-10k-key lists the asof
-    hybrid auto path produces). The old left-nested eqNullSafe OR chain —
-    kept only for composite keys, which stay small — built a ~10k-deep
-    expression tree that risked analyzer stack overflow (round-1 advice).
-    ``isin`` never matches NULL, so a NULL hot key is handled with an
-    explicit isNull branch to preserve eqNullSafe semantics."""
+    probe, push-down-able, and safe for the up-to-10k-key lists
+    ``engine.skew.detect_hot_keys`` returns). The old left-nested
+    eqNullSafe OR chain — kept only for composite keys, which stay small —
+    built a ~10k-deep expression tree that risked analyzer stack overflow
+    (round-1 advice). ``isin`` never matches NULL, so a NULL hot key is
+    handled with an explicit isNull branch to preserve eqNullSafe
+    semantics."""
     ents = _as_list(entity)
     if len(ents) == 1:
         vals = [hk[0] if isinstance(hk, (tuple, list)) else hk for hk in hot_keys]

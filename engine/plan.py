@@ -101,7 +101,6 @@ def _lower_asof(df, plan, p, tables):
         state_ts=p.get("state_ts", "ts"), values=p.get("values"),
         strict=p.get("strict", False), strategy=p.get("strategy", "union"),
         suffix=p.get("suffix", ""), bucket=p.get("bucket", "1 day"),
-        hot_threshold=p.get("hot_threshold"),
     )
 
 

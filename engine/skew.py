@@ -58,9 +58,9 @@ def detect_hot_keys(
     values for a single key column, Rows for composite keys; capped at
     ``max_keys`` (by definition at most |df| / threshold keys qualify).
 
-    Used to route hot entities to the time-bucketed plans (as-of hybrid
-    strategy, engine.hotwin window ops) while the long tail keeps the plain
-    single-window plans.
+    Used to route hot entities to the time-bucketed plans (one list per
+    pipeline, passed to ``engine.plan.lower(hot_keys=...)``) while the long
+    tail keeps the plain single-window plans.
 
     ``sample_fraction``: detect on a Bernoulli sample (threshold scaled
     accordingly) — hot keys are by definition orders of magnitude above the

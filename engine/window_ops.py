@@ -54,25 +54,8 @@ def forward_fill(
     ts: str,
     cols: Iterable[str],
     out_suffix: str = "_ffill",
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
-    """W1: per entity ordered by ts, nulls replaced by the last earlier non-null.
-
-    ``hot_keys``/``bucket``: skew-proof time-bucketed routing, see lag_features.
-    """
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = forward_fill(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, cols, out_suffix
-        )
-        hot = hotwin.bucketed_forward_fill(
-            df.where(pred), entity, ts, cols, out_suffix,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
+    """W1: per entity ordered by ts, nulls replaced by the last earlier non-null."""
     w = _entity_window(entity, ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     for c in cols:
         df = df.withColumn(c + out_suffix, F.last(c, ignorenulls=True).over(w))
@@ -100,27 +83,8 @@ def lag_features(
     cols: Iterable[str],
     lags: Sequence[int] = (1,),
     leads: Sequence[int] = (),
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
-    """W3: c_lag{k} / c_lead{k} per entity ordered by ts (leads = labels only).
-
-    ``hot_keys``: keys routed through the time-bucketed skew-proof plan
-    (engine.hotwin) instead of serializing into one window task; ``bucket``
-    is its time-split width. Cold keys keep this plain single-window plan.
-    """
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = lag_features(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, cols, lags, leads
-        )
-        hot = hotwin.bucketed_lag_features(
-            df.where(pred), entity, ts, cols, lags, leads,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
+    """W3: c_lag{k} / c_lead{k} per entity ordered by ts (leads = labels only)."""
     w = _entity_window(entity, ts)
     exprs = []
     for c in cols:
@@ -137,29 +101,14 @@ def sessionize(
     ts: str,
     gap: str | int | float = "30 minutes",
     session_col: str = "session_id",
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
     """W4: new session when the gap since the previous event exceeds ``gap``.
 
     ``session_col`` is a per-entity ordinal starting at 1 (first event of the
     first session = 1). Timestamp math goes through epoch_micros (TIMESTAMP_NTZ
-    rule, SURVEY.md §0.1). ``hot_keys``/``bucket``: see ``lag_features``.
+    rule, SURVEY.md §0.1).
     """
     gap_us = int(parse_duration_seconds(gap) * 1_000_000)
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = sessionize(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts,
-            gap=gap, session_col=session_col,
-        )
-        hot = hotwin.bucketed_sessionize(
-            df.where(pred), entity, ts, gap_us, session_col=session_col,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
     w = _entity_window(entity, ts)
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts_us = epoch_micros(ts)
@@ -175,8 +124,6 @@ def rolling_aggregates(
     aggs: dict[str, Sequence[str]],
     window: str | int | float = "1 hour",
     method: str = "frame",
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
     _bucket_us: int | None = None,
 ) -> DataFrame:
     """W5: trailing time-range aggregates per entity — events in [t-W, t].
@@ -200,28 +147,15 @@ def rolling_aggregates(
       O(n·w) serial into O(n) — the scalable path for skewed corpora (used
       by the flagship job). Float results are allclose-but-not-bitwise vs
       "frame" (subtraction of prefix sums). min/max do not decompose and
-      are rejected under this method.
+      are rejected under this method. ``_bucket_us`` is set only by the hot
+      branch of ``engine.plan.lower``: time-bucketed prefix sums and cutoff
+      as-of, so a hot key never serializes into one task.
     """
     win_us = int(parse_duration_seconds(window) * 1_000_000)
     suffix = (
         window.replace(" ", "") if isinstance(window, str) else f"{int(window)}s"
     )
     ents = _as_list(entity)
-    if hot_keys:
-        if method != "prefix":
-            raise ValueError("hot_keys requires method='prefix' (frame is O(n·w) serial per key)")
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = rolling_aggregates(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, aggs,
-            window=window, method="prefix",
-        )
-        hot = rolling_aggregates(
-            df.where(pred), entity, ts, aggs, window=window, method="prefix",
-            _bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
     if method == "frame":
         order = epoch_micros(ts)
         w = (
@@ -361,26 +295,8 @@ def cumulative_stats(
     entity: str | Sequence[str],
     ts: str,
     aggs: dict[str, Sequence[str]],
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
-    """W7: running aggregates per entity since the start of its history.
-
-    ``hot_keys``/``bucket``: skew-proof time-bucketed routing, see lag_features
-    (min/max also stitch across buckets — expanding frames decompose).
-    """
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = cumulative_stats(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, aggs
-        )
-        hot = hotwin.bucketed_cumulative_stats(
-            df.where(pred), entity, ts, aggs,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
+    """W7: running aggregates per entity since the start of its history."""
     w = _entity_window(entity, ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     fns = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}
     exprs = [

@@ -36,26 +36,23 @@ from engine.io import read_table
 from engine.plan import FeatureEngine
 
 
-def build_features(probes, state, entity, probe_ts, values, gap, lags,
-                   asof_strategy="hybrid", hot_keys=None):
+def build_features(probes, state, entity, probe_ts, values, gap, lags, hot_keys=None):
     """Build the flagship pipeline through the FeaturePlan IR (§3.1) so the
     serialized plan rides in the checkpoint lineage — a resumed job can
     prove exactly what pipeline produced each committed partition.
 
-    With ``asof_strategy='hybrid'`` the hot/cold split happens at the
-    PIPELINE level (engine.plan.lower hot_keys=...): the plan steps stay
-    'union' and the lowering routes pre-detected hot keys through the
-    time-bucketed variants of every per-entity operator."""
-    step_strategy = "union" if asof_strategy == "hybrid" else asof_strategy
+    The hot/cold split happens at the PIPELINE level (engine.plan.lower
+    hot_keys=...): the plan matches the fused chain, which time-splits the
+    pre-detected hot keys inside its two exchanges. An empty list lowers
+    to the plain single-window chain."""
     eng = (
         FeatureEngine(probes, entity=entity, ts=probe_ts)
-        .asof(state, values=values, suffix="_last", strategy=step_strategy)
+        .asof(state, values=values, suffix="_last")
         .lag([values[0] + "_last"], lags=list(lags))
         .sessionize(gap)
         .rolling({values[0] + "_last": ["count", "sum"]}, "1 day", method="prefix")
     )
-    keys = hot_keys if asof_strategy == "hybrid" else None
-    return eng.to_df(hot_keys=keys), eng.plan
+    return eng.to_df(hot_keys=hot_keys), eng.plan
 
 
 def stage_inputs(spark, probes_p, state_p, stage_dir, files_per_pid: int = 8):
@@ -103,9 +100,6 @@ def main(argv=None):
     ap.add_argument("--gap", default="30 minutes")
     ap.add_argument("--lags", type=int, nargs="+", default=[1])
     ap.add_argument("--parallelism", type=int, default=0, help="spark.sql.shuffle.partitions")
-    ap.add_argument("--asof-strategy", default="hybrid",
-                    choices=["union", "merge", "bucketed", "hybrid"],
-                    help="physical as-of strategy; hybrid = hot/cold skew split")
     ap.add_argument("--output-partition-by", nargs="*", default=[],
                     help="extra hive-partition columns under the pid layout "
                          "(P4 pruning for downstream readers), e.g. source")
@@ -144,22 +138,20 @@ def main(argv=None):
             "user_id", "ts", "value", "event_type"
         )
 
-    hot_keys = None
-    if args.asof_strategy == "hybrid":
-        # per-input metadata, detected once (sampled partial-agg count).
-        # Cost-based (r3): a key is only routed to the time-bucketed plan
-        # when its serial window task would actually straggle the job —
-        # below that bar the fused plan degenerates to the plain chain,
-        # which is faster (the hybrid machinery's fixed costs are real).
-        from engine.skew import straggler_hot_keys
+    # per-input metadata, detected once (sampled partial-agg count).
+    # Cost-based (r3): a key is only routed to the time-bucketed plan
+    # when its serial window task would actually straggle the job —
+    # below that bar the fused plan degenerates to the plain chain,
+    # which is faster (the routed machinery's fixed costs are real).
+    from engine.skew import straggler_hot_keys
 
-        n = probes.count() + state.count()
-        hot_keys = straggler_hot_keys(
-            probes.select(entity).unionByName(state.select(entity)), entity, n,
-            cores=spark.sparkContext.defaultParallelism,
-            sample_fraction=0.05 if n > 1_000_000 else None,
-        )
-        print(f"hot keys routed (straggler condition): {len(hot_keys)}")
+    n = probes.count() + state.count()
+    hot_keys = straggler_hot_keys(
+        probes.select(entity).unionByName(state.select(entity)), entity, n,
+        cores=spark.sparkContext.defaultParallelism,
+        sample_fraction=0.05 if n > 1_000_000 else None,
+    )
+    print(f"hot keys routed (straggler condition): {len(hot_keys)}")
 
     io = ParquetJournalTableIO(args.output, extra_partition_cols=args.output_partition_by)
     mgr = CheckpointManager(io, args.partitions)
@@ -183,15 +175,13 @@ def main(argv=None):
         cp = probes_p.where(F.col(PID_COL).isin(chunk))
         cs = state_p.where(F.col(PID_COL).isin(chunk)).drop(PID_COL)
         feat, plan = build_features(cp, cs, entity, probe_ts, values, args.gap,
-                                    args.lags, asof_strategy=args.asof_strategy,
-                                    hot_keys=hot_keys)
+                                    args.lags, hot_keys=hot_keys)
         if lineage is None:
             lineage = {
                 "inputs": {"input": args.input, "synthetic": args.synthetic, "seed": args.seed},
                 "params": {"gap": args.gap, "lags": args.lags, "partitions": args.partitions,
-                           "asof_strategy": args.asof_strategy,
                            "stage_input": args.stage_input,
-                           "n_hot_keys": len(hot_keys or [])},
+                           "n_hot_keys": len(hot_keys)},
                 "plan": plan.to_dict(),
                 "code_version": os.environ.get("AFG_CODE_VERSION", "dev"),
             }

@@ -12,7 +12,7 @@ def pdata(seq_fixtures):
     return probes, state
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "bucketed"])
+@pytest.mark.parametrize("strategy", ["union", "bucketed"])
 @pytest.mark.parametrize("strict", [False, True])
 def test_asof_matches_pandas_oracle(seq_fixtures, pdata, strategy, strict):
     got = asof_join(
@@ -37,31 +37,33 @@ def test_all_strategies_agree(seq_fixtures):
         on="doc_id", probe_ts="asof_ts", state_ts="ts", values=["fvalue", "fcat"]
     )
     u = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="union", **kw).toPandas()
-    m = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="merge", **kw).toPandas()
     b = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="bucketed", **kw).toPandas()
-    assert_frames_allclose(u, m)
     assert_frames_allclose(u, b)
 
 
 @pytest.mark.parametrize("strict", [False, True])
-@pytest.mark.parametrize("hot_threshold", [None, 10])
-def test_hybrid_matches_oracle(seq_fixtures, pdata, strict, hot_threshold):
-    """hot_threshold=10 forces nearly every key down the bucketed path;
-    None auto-detects (fixture's hot doc only)."""
-    got = asof_join(
-        seq_fixtures["probes"],
-        seq_fixtures["seq_events"],
-        on="doc_id",
-        probe_ts="asof_ts",
-        state_ts="ts",
-        values=["fvalue", "fcat"],
-        strict=strict,
-        strategy="hybrid",
-        hot_threshold=hot_threshold,
-    ).toPandas()
-    probes, state = pdata
+@pytest.mark.parametrize("hot", ["detected", "every"])
+def test_asof_plan_hot_keys_matches_oracle(seq_fixtures, pdata, strict, hot):
+    """A one-step asof plan lowered with hot keys takes the fused chain
+    (its hot entities time-split into 6-hour buckets) and must equal the
+    pandas oracle — for the detected hot list and for every key hot."""
+    from engine.plan import FeatureEngine, _fused_split
+    from engine.skew import detect_hot_keys
+
+    probes, state = seq_fixtures["probes"], seq_fixtures["seq_events"]
+    keys = probes.select("doc_id").unionByName(state.select("doc_id"))
+    hot_keys = detect_hot_keys(keys, "doc_id", threshold=50 if hot == "detected" else 1)
+    assert hot_keys
+    if hot == "every":
+        assert len(hot_keys) == keys.distinct().count()
+    eng = FeatureEngine(probes, entity="doc_id", ts="asof_ts").asof(
+        state, state_ts="ts", values=["fvalue", "fcat"], strict=strict
+    )
+    assert _fused_split(eng.plan) is not None
+    got = eng.to_df(hot_keys=hot_keys, bucket="6 hours").toPandas()
+    probes_pd, state_pd = pdata
     want = oracle_asof(
-        probes, state, "doc_id", "asof_ts", "ts", ["fvalue", "fcat"], strict=strict
+        probes_pd, state_pd, "doc_id", "asof_ts", "ts", ["fvalue", "fcat"], strict=strict
     )
     assert_frames_allclose(got, want)
 
@@ -94,7 +96,7 @@ def test_asof_last_row_not_last_nonnull(spark):
     probes = spark.createDataFrame(
         pd.DataFrame({"k": ["a"], "ts": pd.to_datetime(["2024-01-01 02:00:00"])})
     )
-    for strategy in ("union", "merge", "bucketed"):
+    for strategy in ("union", "bucketed"):
         row = asof_join(probes, state, on="k", strategy=strategy).collect()[0]
         assert row["v"] is None, strategy
 
@@ -108,7 +110,7 @@ def test_asof_no_state_entity_yields_nulls(spark):
     probes = spark.createDataFrame(
         pd.DataFrame({"k": ["a", "b"], "ts": pd.to_datetime(["2024-06-01"] * 2)})
     )
-    for strategy in ("union", "merge", "bucketed"):
+    for strategy in ("union", "bucketed"):
         got = {
             r["k"]: r["v"]
             for r in asof_join(probes, state, on="k", strategy=strategy).collect()

@@ -1,14 +1,15 @@
 """Equality of the skew-proof (time-bucketed, engine.hotwin) window plans
 with the plain single-window plans, on the skewed fixture (hot doc holds a
-large share of rows) plus forced-hot long-tail keys."""
+large share of rows) plus forced-hot long-tail keys. Hot keys are routed
+the one way the engine offers: a FeaturePlan lowered with ``hot_keys``."""
 
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
+from engine.plan import FeatureEngine
 from engine.skew import detect_hot_keys
-from engine.window_ops import lag_features, rolling_aggregates, sessionize
 
 
 @pytest.fixture(scope="module")
@@ -32,94 +33,61 @@ def _sorted(pdf, cols):
     return pdf.sort_values(cols, kind="mergesort").reset_index(drop=True)
 
 
-def test_lag_hot_matches_plain(ev, hot_keys):
-    plain = lag_features(ev, "doc_id", "ts", ["fvalue"], lags=[1, 2], leads=[1]).toPandas()
-    hot = lag_features(
-        ev, "doc_id", "ts", ["fvalue"], lags=[1, 2], leads=[1],
-        hot_keys=hot_keys, bucket="2 days",
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    for c in ["fvalue_lag1", "fvalue_lag2", "fvalue_lead1"]:
+def _plain_and_hot(ev, hot_keys, bucket, add_step):
+    """One single-step plan lowered plainly and with ``hot_keys``, both
+    sorted on (doc_id, ts, fvalue)."""
+    def lowered(**kw):
+        eng = add_step(FeatureEngine(ev, entity="doc_id", ts="ts"))
+        return _sorted(eng.to_df(**kw).toPandas(), ["doc_id", "ts", "fvalue"])
+
+    return lowered(), lowered(hot_keys=hot_keys, bucket=bucket)
+
+
+def _assert_close(a, b, cols):
+    for c in cols:
         assert np.allclose(
             a[c].astype(float), b[c].astype(float), equal_nan=True
         ), c
 
 
+def test_lag_hot_matches_plain(ev, hot_keys):
+    a, b = _plain_and_hot(
+        ev, hot_keys, "2 days", lambda e: e.lag(["fvalue"], lags=[1, 2], leads=[1])
+    )
+    _assert_close(a, b, ["fvalue_lag1", "fvalue_lag2", "fvalue_lead1"])
+
+
 def test_sessionize_hot_matches_plain(ev, hot_keys):
-    plain = sessionize(ev, "doc_id", "ts", gap="6 hours").toPandas()
-    hot = sessionize(
-        ev, "doc_id", "ts", gap="6 hours", hot_keys=hot_keys, bucket="2 days"
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
+    a, b = _plain_and_hot(ev, hot_keys, "2 days", lambda e: e.sessionize("6 hours"))
     assert (a["session_id"].astype("int64").values
             == b["session_id"].astype("int64").values).all()
 
 
 def test_rolling_hot_matches_plain(ev, hot_keys):
-    aggs = {"fvalue": ["count", "sum", "avg"]}
-    plain = rolling_aggregates(
-        ev, "doc_id", "ts", aggs, window="2 days", method="prefix"
-    ).toPandas()
-    hot = rolling_aggregates(
-        ev, "doc_id", "ts", aggs, window="2 days", method="prefix",
-        hot_keys=hot_keys, bucket="12 hours",
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    for c in ["fvalue_count_2days", "fvalue_sum_2days", "fvalue_avg_2days"]:
-        assert np.allclose(
-            a[c].astype(float), b[c].astype(float), equal_nan=True
-        ), c
+    a, b = _plain_and_hot(
+        ev, hot_keys, "12 hours",
+        lambda e: e.rolling({"fvalue": ["count", "sum", "avg"]}, "2 days", method="prefix"),
+    )
+    _assert_close(a, b, ["fvalue_count_2days", "fvalue_sum_2days", "fvalue_avg_2days"])
 
 
 def test_ffill_hot_matches_plain(ev, hot_keys):
-    from engine.window_ops import forward_fill
-
-    plain = forward_fill(ev, "doc_id", "ts", ["fvalue"]).toPandas()
-    hot = forward_fill(
-        ev, "doc_id", "ts", ["fvalue"], hot_keys=hot_keys, bucket="2 days"
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    assert np.allclose(
-        a["fvalue_ffill"].astype(float), b["fvalue_ffill"].astype(float),
-        equal_nan=True,
-    )
+    a, b = _plain_and_hot(ev, hot_keys, "2 days", lambda e: e.ffill(["fvalue"]))
+    _assert_close(a, b, ["fvalue_f"])
 
 
 def test_cumulative_hot_matches_plain(ev, hot_keys):
-    from engine.window_ops import cumulative_stats
-
-    aggs = {"fvalue": ["sum", "count", "min", "max", "avg"]}
-    plain = cumulative_stats(ev, "doc_id", "ts", aggs).toPandas()
-    hot = cumulative_stats(
-        ev, "doc_id", "ts", aggs, hot_keys=hot_keys, bucket="12 hours"
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    for n in ["sum", "count", "min", "max", "avg"]:
-        c = f"fvalue_cum{n}"
-        assert np.allclose(
-            a[c].astype(float), b[c].astype(float), equal_nan=True
-        ), c
-
-
-def test_rolling_frame_with_hot_keys_rejected(ev, hot_keys):
-    with pytest.raises(ValueError, match="prefix"):
-        rolling_aggregates(
-            ev, "doc_id", "ts", {"fvalue": ["sum"]}, window="1 day",
-            method="frame", hot_keys=hot_keys,
-        )
+    names = ["sum", "count", "min", "max", "avg"]
+    a, b = _plain_and_hot(
+        ev, hot_keys, "12 hours", lambda e: e.cumulative({"fvalue": names})
+    )
+    _assert_close(a, b, [f"fvalue_cum{n}" for n in names])
 
 
 def test_plan_level_hot_lowering_matches_plain(seq_fixtures, hot_keys):
     """lower(plan, hot_keys=...) (pipeline-level hot/cold split) must agree
     with the plain lowering on the full as-of → lag → sessionize → rolling
     chain — the production job's skew path (jobs/featuregen.py)."""
-    from engine.plan import FeatureEngine
-
     def build():
         return (
             FeatureEngine(seq_fixtures["probes"], entity="doc_id", ts="asof_ts")
@@ -141,25 +109,6 @@ def test_plan_level_hot_lowering_matches_plain(seq_fixtures, hot_keys):
         assert np.allclose(a[c].astype(float), b[c].astype(float), equal_nan=True), c
     assert (a["session_id"].astype("int64").values
             == b["session_id"].astype("int64").values).all()
-
-
-def test_asof_hybrid_precomputed_hot_keys(seq_fixtures, hot_keys):
-    from engine.asof import asof_join
-
-    kw = dict(on="doc_id", probe_ts="asof_ts", state_ts="ts", values=["fvalue", "fcat"])
-    u = asof_join(
-        seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="union", **kw
-    ).toPandas()
-    h = asof_join(
-        seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="hybrid",
-        hot_keys=hot_keys, **kw,
-    ).toPandas()
-    key = ["doc_id", "asof_ts"]
-    a, b = _sorted(u, key), _sorted(h, key)
-    assert np.allclose(
-        a["fvalue"].astype(float), b["fvalue"].astype(float), equal_nan=True
-    )
-    assert (a["fcat"].fillna("∅") == b["fcat"].fillna("∅")).all()
 
 
 def test_hot_predicate_compiles_to_isin_and_handles_nulls(spark):

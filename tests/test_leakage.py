@@ -2,7 +2,7 @@
 
 For a cutoff T: every probe with asof_ts <= T must produce IDENTICAL features
 when (a) all state rows with ts > T are deleted, and (b) their values are
-replaced with garbage. Run for both tie policies and both strategies.
+replaced with garbage. Run for both tie policies and both as-of strategies.
 """
 
 import pandas as pd
@@ -23,7 +23,7 @@ def _features(probes, state, strict, strategy):
     return out.toPandas()
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge"])
+@pytest.mark.parametrize("strategy", ["union", "bucketed"])
 @pytest.mark.parametrize("strict", [False, True])
 def test_no_temporal_leakage(seq_fixtures, strict, strategy):
     probes = seq_fixtures["probes"].where(F.col("asof_ts") <= F.lit(CUTOFF))
